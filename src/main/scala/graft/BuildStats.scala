@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.graft.BusBridge
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import java.util.concurrent.atomic.AtomicLong
@@ -53,7 +54,7 @@ object BuildStats {
       SparkEntry.queries(which)(spark, sfDir).count(); ()
     }
     // listener events are async: settle before zeroing the counters
-    drainUntilStable(stages)
+    BusBridge.drain(spark.sparkContext)
     inB.set(0); inR.set(0); swB.set(0); swR.set(0); srB.set(0); taskMs.set(0)
     stages.set(0)
     val t0 = System.nanoTime()
@@ -74,7 +75,7 @@ object BuildStats {
         // consumption-grain probe: park the upstream label tier OUTSIDE
         // the measured region (the bench times it under entity_build)
         graft.queries.RefQueries.buildEntityTiers(spark, sfDir)
-        drainUntilStable(stages)
+        BusBridge.drain(spark.sparkContext)
         inB.set(0); inR.set(0); swB.set(0); swR.set(0); srB.set(0)
         taskMs.set(0); stages.set(0)
         graft.queries.GraphQueries.buildEntityFlowTier(spark, sfDir)
@@ -86,23 +87,11 @@ object BuildStats {
         sys.error(s"unknown build/query $other")
     }
     val wall = (System.nanoTime() - t0) / 1e9
-    drainUntilStable(stages)
+    BusBridge.drain(spark.sparkContext)
     println(f"[buildstats] $which wall=$wall%.2fs taskTime=${taskMs.get / 1000.0}%.1fs " +
       f"input=${inB.get / 1e6}%.1fMB/${inR.get / 1e6}%.2fMrec " +
       f"shufW=${swB.get / 1e6}%.1fMB/${swR.get / 1e6}%.2fMrec shufR=${srB.get / 1e6}%.1fMB " +
       f"stages=${stages.get}")
     spark.stop()
-  }
-
-  /** Listener events are posted asynchronously; a fixed sleep
-    * undercounts on a loaded box. Poll until the stage counter is
-    * quiet for 1 s (bounded at 15 s). */
-  private def drainUntilStable(stages: AtomicLong): Unit = {
-    val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
-    var last = -1L
-    while (System.nanoTime() < deadline && stages.get != last) {
-      last = stages.get
-      Thread.sleep(1000)
-    }
   }
 }

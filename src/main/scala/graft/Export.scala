@@ -297,7 +297,7 @@ object Export {
       catch { case e: IllegalArgumentException =>
         System.err.println(e.getMessage); sys.exit(1)
       }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Env.cpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -1,14 +1,24 @@
 package graft.chain
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** The sink side of the reference contract: partitioned, ordered,
   * idempotently-overwritable table storage (S5/ST3, schema.cql PK design).
   *
   * Cassandra's `(bucket, id)` primary keys become Hive-style partition
   * directories on the bucket column + `sortWithinPartitions` on the
-  * clustering column — a point lookup prunes to one bucket directory and
+  * clustering column. A point lookup is the analog of a Cassandra
+  * single-partition read: it computes the one directory its key selects
+  * and reads only that, with the declared schema, so its only Spark job
+  * is the scan itself — no listing of the table's other directories
+  * (~40k at full history), no schema inference — and the scan skips to
   * one parquet row group (min/max stats on the sorted id column).
   *
   * Idempotence (the reference's INSERT-by-PK last-write-wins, ST3) is
@@ -322,26 +332,98 @@ object ChainStore extends ChainSink {
     conf.coalesce(1).write.mode("overwrite")
       .parquet(s"$out/configuration")
 
-  /** Point lookup by full hash: prunes to one p2 directory, row-group
-    * skips on the sorted tx_prefix column, final equality on the binary
-    * hash (F1's unhex direction in the lookup path). Indexes written
-    * before the binary column existed fall back to hex-string equality —
-    * same pruning, same result, 2× the hash-column bytes scanned. */
+  /** Point lookup by full hash: reads only the `p2=<first 2 hex>`
+    * directory of the index ([[readPartitionDir]]), row-group skips on
+    * the sorted tx_prefix column, final equality on the binary hash
+    * (F1's unhex direction in the lookup path). Indexes written before
+    * the binary column existed fall back to hex-string equality — same
+    * pruning, same result, 2× the hash-column bytes scanned; the
+    * directory's parquet footer, read on the driver, tells which. A
+    * hash whose `p2` directory does not exist returns an empty frame
+    * with a hit's columns. */
   def lookupByHash(s: SparkSession, out: String, hashHex: String): DataFrame = {
-    val idx = s.read.parquet(s"$out/transaction_by_tx_prefix")
+    val idx = readPartitionDir(s, s"$out/transaction_by_tx_prefix",
+      Schemas.transactionByTxPrefix, StructField("p2", StringType),
+      hashHex.substring(0, 2))
     val finalEq =
       if (idx.schema.fieldNames.contains("tx_hash_bin"))
         col("tx_hash_bin") === unhex(lit(hashHex))
       else col("tx_hash") === lit(hashHex)
-    idx.filter(col("p2") === hashHex.substring(0, 2) &&
+    idx.filter(
       col("tx_prefix") === hashHex.substring(0, Chain.PrefixLen) && finalEq)
   }
 
-  /** Point lookup by tx id: partition-pruned on the bucket column. */
+  /** Point lookup by tx id: reads only the `tx_id_group=<id / bucket>`
+    * directory ([[readPartitionDir]]), row-group skips on the sorted
+    * tx_id column. Works on both layouts: on the epoch-keyed store the
+    * bucket's `ingest_epoch` sub-directories are read too, and the
+    * result ends with `ingest_epoch`, as a full-table read does. A
+    * bucket directory that does not exist returns an empty frame with
+    * the contract's columns. */
   def lookupByTxId(s: SparkSession, out: String, txId: Long): DataFrame =
-    s.read.parquet(s"$out/transaction")
-      .filter(col("tx_id_group") === txId / Chain.TxBucketSize &&
-        col("tx_id") === txId)
+    readPartitionDir(s, s"$out/transaction", Schemas.transaction,
+      StructField("tx_id_group", LongType),
+      (txId / Chain.TxBucketSize).toString)
+      .filter(col("tx_id") === txId)
+
+  /** One partition directory `<part>=<value>` of the partitioned table
+    * at `table`, read as a slice of that table, the way Cassandra reads
+    * one partition: `basePath` is the table root, so `part` (and any
+    * partition level below it) stays a column, and the schema is given,
+    * so no Spark job lists the table's sibling directories or infers a
+    * schema — the scan is the lookup's only job. The schema is the
+    * `declared` contract restricted to the columns the data files hold,
+    * in their order (one footer, read on the driver: an index written
+    * before a column existed is read without it), then `part` with its
+    * declared type — so a numeric-looking `p2=12` stays a string. The
+    * directory is listed once on the driver through its own FileSystem
+    * (the epoch layout lists one epoch below it to reach a file). A
+    * directory that does not exist yields an empty frame with the
+    * contract's columns; a missing table root still fails. Spark lists
+    * a directory's own partition levels serially while each holds ≤ 32
+    * entries (the parallel discovery threshold): a bucket accrues one
+    * `ingest_epoch` entry per epoch until compaction. */
+  private def readPartitionDir(s: SparkSession, table: String,
+      declared: StructType, part: StructField, value: String): DataFrame = {
+    val root = new Path(table)
+    val dir = new Path(root, s"${part.name}=$value")
+    val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val listing =
+      try Some(fs.listStatus(dir))
+      catch { case _: java.io.FileNotFoundException => None }
+    val held = listing.flatMap(firstDataFile(fs, _)).map { f =>
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromStatus(f, s.sparkContext.hadoopConfiguration))
+      try reader.getFileMetaData.getSchema.getFields.asScala
+        .map(_.getName).toSeq
+      finally reader.close()
+    }
+    val columns = held.fold(declared.fields.toSeq)(
+      _.flatMap(n => declared.find(_.name == n)))
+    val schema = StructType(
+      columns.filterNot(_.name == part.name).map(_.copy(nullable = true)) :+
+        part)
+    listing match {
+      case Some(_) =>
+        s.read.schema(schema).option("basePath", table).parquet(dir.toString)
+      case None =>
+        require(fs.exists(root), s"no table at $root")
+        s.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    }
+  }
+
+  /** The first data file (not `_`/`.`-hidden) under a directory
+    * listing, descending into sub-directories only until one is found. */
+  private def firstDataFile(fs: FileSystem,
+      entries: Array[FileStatus]): Option[FileStatus] = {
+    val visible = entries.filterNot { e =>
+      val n = e.getPath.getName
+      n.startsWith("_") || n.startsWith(".")
+    }.sortBy(_.getPath.getName)
+    visible.find(_.isFile).orElse(visible.iterator.filter(_.isDirectory)
+      .flatMap(d => firstDataFile(fs, fs.listStatus(d.getPath)))
+      .nextOption())
+  }
 
   /** Multi-chain keyspace: one currency partition per chain (the
     * reference's keyspace-per-coin, §2.7), unioned with a `currency`

@@ -26,8 +26,9 @@ object EntityMaterialize {
   private val locks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  /** Bump on any change to the edge derivation or clustering. */
-  private val FormatVersion = 1
+  /** Bump on any change to the edge derivation or clustering. Tiers
+    * built from the labels fold it into their own key. */
+  private[graft] val FormatVersion = 1
 
   private def baseKeyed(dir: String, w: String): String = {
     val mtime = Seq("lineitem", "orders").map { t =>

@@ -107,16 +107,26 @@ object GraphMaterialize {
     * corpus-sized passes) per referencing plan, while the parked tier
     * is a four-column pruned scan. The label side is itself the parked
     * clustering tier, so this build is label-tier consumption, not a
-    * recompute. */
-  def entityFlowTable(s: SparkSession, dir: String)(
+    * recompute; the root is keyed on that tier too (see
+    * [[entityFlowRoot]]). */
+  def entityFlowTable(s: SparkSession, dir: String, window: Long)(
       build: => DataFrame): DataFrame = {
-    val root = s"${base(dir)}_ef"
+    val root = entityFlowRoot(dir, window)
     locks.computeIfAbsent(root, _ => new Object).synchronized {
       if (!new File(s"$root/_SUCCESS").exists())
         build.write.mode("overwrite").parquet(root)
     }
     s.read.parquet(root)
   }
+
+  /** Root of the entity-flow tier. Besides the fixture it is keyed on
+    * the label tier the flows are built from: that tier's format version
+    * and the clustering window. A long-lived `target/intermediate` then
+    * never serves flows derived from labels of an older clustering or
+    * another window. */
+  private[graft] def entityFlowRoot(dir: String, window: Long,
+      labelVersion: Int = EntityMaterialize.FormatVersion): String =
+    s"${base(dir)}_ef_e${labelVersion}_w$window"
 
   /** TagPack-shaped external attribution CSV — the FILE fixture the
     * entity_tags_src query ingests (GraphSense's TagPack path: curated

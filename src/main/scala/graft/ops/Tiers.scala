@@ -31,11 +31,8 @@ object Tiers {
     * at cluster scale each job saturates executors and 4 suffices). */
   val MaxConcurrentBuilds: Int = {
     // malformed or non-positive env values fall back to the computed
-    // default instead of throwing inside object init (an opaque
-    // ExceptionInInitializerError) or flowing 0 into the pool size
-    def envInt(name: String): Option[Int] =
-      sys.env.get(name).flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-        .filter(_ > 0)
+    // default (graft.Env)
+    import graft.Env.envInt
     envInt("SPARK_GRAFT_BUILD_THREADS").getOrElse {
       // scale with the session's core budget, bounded [4, 8]: measured
       // r13 at sf0.1/32 cores, ann_build (11 independent tier jobs)

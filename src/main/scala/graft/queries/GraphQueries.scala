@@ -282,7 +282,7 @@ object GraphQueries {
     * corpus-sized derivations of one logical frame; now each consumer
     * starts from a four-column pruned scan. */
   private def entityFlows(s: SparkSession, dir: String): DataFrame =
-    graft.ops.GraphMaterialize.entityFlowTable(s, dir)(
+    graft.ops.GraphMaterialize.entityFlowTable(s, dir, EntityWindow)(
       deriveEntityFlows(s, dir))
 
   /** The entity-flow derivation itself (unparked — the tier build;

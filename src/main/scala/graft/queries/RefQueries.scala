@@ -114,7 +114,7 @@ object RefQueries {
   /** entity_summary's pinned clustering window (first ~2 weeks of chain
     * history): early-chain co-spend graphs are sparse enough for real
     * entity structure at every verification sf. */
-  private[queries] val EntityWindow = 1110L
+  private[graft] val EntityWindow = 1110L
 
   /** Multi-input-heuristic entity labels: star edges from each input
     * address to its tx's minimum address (same components as the per-tx

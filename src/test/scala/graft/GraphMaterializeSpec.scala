@@ -12,6 +12,9 @@ import graft.ops.GraphMaterialize
   * entity tiers). */
 class GraphMaterializeSpec extends SparkSpec {
 
+  /** The clustering window the entity queries pin. */
+  private val Window = graft.queries.RefQueries.EntityWindow
+
   test("edge tier parks once, reuses, and matches the declarative edges") {
     val dir = sf("sf0.001")
     graft.queries.GraphQueries.buildGraphTier(spark, dir)
@@ -44,13 +47,13 @@ class GraphMaterializeSpec extends SparkSpec {
     val dir = sf("sf0.001")
     graft.queries.GraphQueries.buildEntityFlowTier(spark, dir)
     // after the build, access must NOT re-run the derivation
-    val flows = GraphMaterialize.entityFlowTable(spark, dir)(
+    val flows = GraphMaterialize.entityFlowTable(spark, dir, Window)(
       sys.error("entity-flow tier rebuilt on reuse"))
     val marker = new File(
       flows.inputFiles.head.stripPrefix("file:").replaceAll("/[^/]+$", "")
         + "/_SUCCESS")
     val mtime = marker.lastModified()
-    GraphMaterialize.entityFlowTable(spark, dir)(
+    GraphMaterialize.entityFlowTable(spark, dir, Window)(
       sys.error("entity-flow tier rebuilt on reuse")).count()
     assert(marker.lastModified() === mtime, "tier was rewritten on reuse")
 
@@ -59,6 +62,20 @@ class GraphMaterializeSpec extends SparkSpec {
     assert(flows.count() === dec.count())
     assert(flows.exceptAll(dec).count() === 0)
     assert(dec.exceptAll(flows).count() === 0)
+  }
+
+  test("entity-flow tier root moves with the label tier's version and " +
+      "window") {
+    val dir = sf("sf0.001")
+    val root = GraphMaterialize.entityFlowRoot(dir, Window)
+    assert(root === GraphMaterialize.entityFlowRoot(dir, Window,
+      graft.ops.EntityMaterialize.FormatVersion))
+    assert(GraphMaterialize.entityFlowRoot(dir, Window,
+      graft.ops.EntityMaterialize.FormatVersion + 1) !== root)
+    assert(GraphMaterialize.entityFlowRoot(dir, Window + 1) !== root)
+    // the tier the entity queries read is parked under exactly this root
+    graft.queries.GraphQueries.buildEntityFlowTier(spark, dir)
+    assert(new File(s"$root/_SUCCESS").exists())
   }
 
   test("entity_tags_src query path is read-only over the parked TagPack CSV") {

@@ -2,7 +2,11 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.graft.BusBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StringType}
 
 import graft.chain.{CassandraShapedSink, Chain, ChainSink, ChainStore, SinkConfig}
 
@@ -161,9 +165,10 @@ class StoreSpec extends SparkSpec {
   test("point lookup by tx id prunes to one bucket") {
     val lookup = ChainStore.lookupByTxId(spark, out, 7L)
     assert(lookup.count() === 1)
-    val plan = lookup.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") ||
-      plan.contains("tx_id_group"), s"no partition pruning in:\n$plan")
+    val files = lookup.inputFiles
+    assert(files.nonEmpty && files.forall(_.contains(
+      s"/transaction/tx_id_group=${7L / Chain.TxBucketSize}/")),
+      s"lookup reads beyond its bucket: ${files.mkString(", ")}")
   }
 
   test("keyset page prunes buckets below the cursor and avoids a " +
@@ -207,6 +212,132 @@ class StoreSpec extends SparkSpec {
     val h = tx.filter(col("tx_id") === 42L).select("tx_hash").as[String].head()
     val got = ChainStore.lookupByHash(spark, out, h)
     assert(got.select("tx_id").as[Long].collect().toSeq === Seq(42L))
+  }
+
+  /** Result of `body` and the Spark jobs it ran on this thread. Suites
+    * share one session, so the jobs are told apart by a thread-local
+    * property; the listener-bus drain makes the count exact. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties != null &&
+            js.properties.getProperty("graft.test.jobs") == tag)
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    sc.setLocalProperty("graft.test.jobs", tag)
+    try {
+      val r = body
+      BusBridge.drain(sc)
+      (r, n.get)
+    } finally {
+      sc.setLocalProperty("graft.test.jobs", null)
+      sc.removeSparkListener(l)
+    }
+  }
+
+  /** Column names and types, nullability aside. */
+  private def shape(df: DataFrame): Seq[(String, DataType)] =
+    df.schema.fields.toSeq.map(f => f.name -> f.dataType)
+
+  test("hash lookup reads one p2 directory: exact hit, typed miss, " +
+      "string p2, one job") {
+    val tx = Chain.transactions(spark, sf("sf0.001"))
+    val iout = Files.createTempDirectory(
+      java.nio.file.Paths.get("target"), "hashidx_").toString
+    // only hashes starting with "0": every p2 directory but 0x is absent
+    val sub = tx.filter(substring(col("tx_hash"), 1, 1) === "0")
+    ChainStore.writePrefixIndex(sub, iout)
+    // a numeric-looking prefix ("05"), which partition inference would
+    // read as the integer 5
+    val (h, id) = sub.filter(substring(col("tx_hash"), 2, 1).rlike("[0-9]"))
+      .orderBy("tx_id").select("tx_hash", "tx_id").as[(String, Long)].head()
+    val (hit, resolveJobs) = jobsOf(ChainStore.lookupByHash(spark, iout, h))
+    assert(resolveJobs === 0, "resolving the lookup ran a Spark job")
+    val (rows, execJobs) = jobsOf(hit.collect())
+    assert(execJobs === 1)
+    assert(rows.map(_.getAs[Long]("tx_id")).toSeq === Seq(id))
+    assert(hit.inputFiles.nonEmpty && hit.inputFiles.forall(
+      _.contains(s"/transaction_by_tx_prefix/p2=${h.take(2)}/")))
+    assert(hit.schema("p2").dataType === StringType)
+    assert(rows.head.getAs[String]("p2") === h.substring(0, 2))
+    assert(shape(hit) === shape(spark.read.parquet(
+      s"$iout/transaction_by_tx_prefix")))
+    // a miss whose p2 directory does not exist: no rows, a hit's columns
+    val missHash = "ff" + h.substring(2)
+    assert(!new java.io.File(
+      s"$iout/transaction_by_tx_prefix/p2=ff").exists())
+    val miss = ChainStore.lookupByHash(spark, iout, missHash)
+    assert(miss.collect().isEmpty)
+    assert(shape(miss) === shape(hit))
+    // and a missing table is still an error, not an empty answer
+    intercept[IllegalArgumentException] {
+      ChainStore.lookupByHash(spark, s"$iout/absent", h)
+    }
+  }
+
+  test("hash lookup on an index without tx_hash_bin uses hex equality") {
+    val tx = Chain.transactions(spark, sf("sf0.001"))
+    val lout = Files.createTempDirectory(
+      java.nio.file.Paths.get("target"), "legacyidx_").toString
+    // the index layout from before the binary hash column existed
+    tx.select(substring(col("tx_hash"), 1, 2).as("p2"),
+        substring(col("tx_hash"), 1, Chain.PrefixLen).as("tx_prefix"),
+        col("tx_hash"), col("tx_id"))
+      .repartition(col("p2"))
+      .sortWithinPartitions(col("tx_prefix"), col("tx_hash"))
+      .write.partitionBy("p2").parquet(s"$lout/transaction_by_tx_prefix")
+    val h = tx.filter(col("tx_id") === 42L).select("tx_hash").as[String]
+      .head()
+    val got = ChainStore.lookupByHash(spark, lout, h)
+    assert(shape(got) === shape(spark.read.parquet(
+      s"$lout/transaction_by_tx_prefix")))
+    assert(got.select("tx_id").as[Long].collect().toSeq === Seq(42L))
+  }
+
+  test("tx-id lookup equals a full-table read of its bucket on the batch " +
+      "and the epoch layout, in one job") {
+    val tx = Chain.transactions(spark, sf("sf0.001"))
+    val bout = Files.createTempDirectory(
+      java.nio.file.Paths.get("target"), "txbatch_").toString
+    val eout = Files.createTempDirectory(
+      java.nio.file.Paths.get("target"), "txepoch_").toString
+    ChainStore.writeTransactions(tx, bout)
+    ChainStore.writeTransactionsEpoch(tx.filter(col("tx_id") % 2 === 0), eout, 0L)
+    ChainStore.writeTransactionsEpoch(tx.filter(col("tx_id") % 2 === 1), eout, 1L)
+    val ids = tx.select("tx_id").as[Long].collect().sorted
+    for (store <- Seq(bout, eout); id <- Seq(ids.head, ids(ids.length / 2),
+        ids.last)) {
+      val g = id / Chain.TxBucketSize
+      // partition inference types the bucket column by its values; the
+      // lookup declares it LongType, as the contract schema does
+      val full = spark.read.parquet(s"$store/transaction")
+        .filter(col("tx_id_group") === g && col("tx_id") === id)
+        .withColumn("tx_id_group", col("tx_id_group").cast("long"))
+      val (lookup, resolveJobs) = jobsOf(
+        ChainStore.lookupByTxId(spark, store, id))
+      assert(resolveJobs === 0, "resolving the lookup ran a Spark job")
+      assert(lookup.inputFiles.nonEmpty && lookup.inputFiles.forall(
+        _.contains(s"/transaction/tx_id_group=$g/")))
+      assert(shape(lookup) === shape(full))
+      val (rows, execJobs) = jobsOf(lookup.collect())
+      assert(execJobs === 1)
+      assert(rows.length === 1)
+      assert(rows.toSeq === full.collect().toSeq)
+    }
+    assert(ChainStore.lookupByTxId(spark, eout, ids.last).columns
+      .last === "ingest_epoch")
+    // a bucket directory that does not exist: no rows, the contract's
+    // columns (this store holds only the transaction scalars)
+    val absent = ChainStore.lookupByTxId(spark, bout,
+      (ids.last / Chain.TxBucketSize + 7) * Chain.TxBucketSize)
+    assert(absent.collect().isEmpty)
+    val contract = graft.chain.Schemas.transaction
+    assert(shape(absent) === (contract.filterNot(_.name == "tx_id_group") :+
+      contract("tx_id_group")).map(f => f.name -> f.dataType))
   }
 
   test("writeChain exports all tables through the sink trait") {
